@@ -677,7 +677,7 @@ object Similarity {
       hi: Long
   ): DataFrame = {
     val ranked = quarRankedBuckets(s, table, bucketKeys)
-    val slice = ranked.slice(lo.toInt, hi.toInt)
+    val slice = ranked.slice(math.toIntExact(lo), math.toIntExact(hi))
     val schema = org.apache.spark.sql.types.StructType(
       s.table(quarTable(table)).select(bucketKeys.map(col): _*).schema)
     s.createDataFrame(java.util.Arrays.asList(slice: _*), schema)

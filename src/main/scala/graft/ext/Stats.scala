@@ -291,7 +291,8 @@ object Stats {
       val aggs = Seq(
         count(lit(1)).as("n"),
         sum(col("v").cast(sumType)).as("__sx"),
-        max(abs(col("v"))).as("__maxv")) ++
+        // in decimal: abs(Long.MinValue) wraps negative in long
+        max(abs(col("v").cast(dec))).as("__maxv")) ++
         (0 until reps).flatMap(b =>
           Seq(
             sum(prod(b).cast(sumType)).as(s"__s$b"),
@@ -312,7 +313,7 @@ object Stats {
         val r = aggLong
           .select(max(
             when(
-              col("__maxv").cast(dec) * col("n") * lit(4) >= lit(Long.MaxValue).cast(dec),
+              col("__maxv") * col("n") * lit(4) >= lit(Long.MaxValue).cast(dec),
               1).otherwise(0)).as("u"))
           .collect()(0)
         !r.isNullAt(0) && r.getInt(0) == 1

@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
   * legacy_permits/helper.py:110-173).
   *
   * One pass computes an `errors: array<string>` column from a declarative
-  * rule list; the two outputs are complementary filters over the SAME cached
-  * plan — Spark evaluates the rule suite once per row inside whole-stage
-  * codegen, and the split costs two scans of the cached result instead of a
-  * row-wise Python loop.
+  * rule list; the two outputs are complementary filters over ONE shared
+  * materialization ([[ValidateOps.split]]) — Spark evaluates the rule suite
+  * once per row inside whole-stage codegen, and the split costs two reads
+  * of the stored result instead of a row-wise Python loop.
   */
 object ValidateOps {
 
@@ -72,21 +72,36 @@ object ValidateOps {
 
   /** Partition into (upload, review): upload = no rule fired, review = at
     * least one, with the errors retained for the reviewer
-    * (chicago/permit_cleaning.py:427-452). The input plan is evaluated once
-    * per output; callers that materialize both should `.persist()` the
-    * flagged frame first — at 100 TB this is one full scan either way since
-    * both filters push into the same parquet scan.
+    * (chicago/permit_cleaning.py:427-452). The two sides share one
+    * materialization of the flagged frame ([[split]]).
     */
   def partition(
       df: DataFrame,
       rules: Seq[Rule],
       errCol: String = "errors"
   ): (DataFrame, DataFrame) = {
-    val flagged = withErrors(df, rules, errCol)
-    (
-      flagged.filter(size(col(errCol)) === 0).drop(errCol),
-      flagged.filter(size(col(errCol)) > 0)
-    )
+    val (upload, review) = split(withErrors(df, rules, errCol), size(col(errCol)) === 0)
+    (upload.drop(errCol), review)
+  }
+
+  /** Split a flagged frame into (rows where `passes` is true, rows where it
+    * is false); a null verdict goes to neither side. Both sides filter ONE
+    * lazy local checkpoint of `flagged`, so its plan runs once per split:
+    * the first action over either side computes and stores the blocks, the
+    * other side reads them back. A partial first action (`limit`, `take`)
+    * stores the partitions it skipped before it returns, so the second side
+    * still sees every row.
+    *
+    * The checkpoint is made per call and never keyed across calls: it
+    * serves exactly this pair. Its blocks are RDD-level (no CacheManager
+    * entry, no `persist()`), freed by the ContextCleaner once both sides
+    * are unreachable. Construction plans the parent, and under AQE runs its
+    * shuffle and broadcast stages, at call time — the row-wise final stage
+    * stays lazy.
+    */
+  def split(flagged: DataFrame, passes: Column): (DataFrame, DataFrame) = {
+    val shared = flagged.localCheckpoint(eager = false)
+    (shared.filter(passes), shared.filter(!passes))
   }
 
   /** The reference's dual-implementation contract (§2.10,

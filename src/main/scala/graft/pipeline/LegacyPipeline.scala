@@ -83,8 +83,8 @@ object LegacyPipeline {
   )
 
   /** The finalize head: universe join + dup flag + the legacy flag suite as
-    * columns — the SHARED parent both split sides filter (exposed so
-    * callers materializing both can persist it once).
+    * columns — the SHARED parent both split sides filter; [[splitFinal]]
+    * materializes it once for both.
     */
   def flagFinal(
       df: DataFrame,
@@ -122,13 +122,13 @@ object LegacyPipeline {
   }
 
   /** The finalize tail: split a [[flagFinal]]-ed frame into the 250-row
-    * numbered upload batches and the review side.
+    * numbered upload batches and the review side, both over one shared
+    * materialization of the flagged frame ([[ValidateOps.split]]).
     */
   def splitFinal(flagged: DataFrame): (DataFrame, DataFrame) = {
-    val upload = flagged
-      .filter(col("valid_row"))
+    val (valid, review) = ValidateOps.split(flagged, col("valid_row"))
+    val upload = valid
       .drop(FlagNames ++ Seq("valid_row", "valid_amount", "duplicate_pin_permit"): _*)
-    val review = flagged.filter(!col("valid_row"))
     (
       ReshapeOps.numberedBuckets(upload, Seq(col("permit_no"), col("pin")), 250, "bucket", "lline"),
       review

@@ -105,8 +105,8 @@ object PermitPipeline {
 
   /** Step 8 head (§3.1): universe membership as a broadcast left join
     * producing the `pin_in_universe` flag, then the §2.10 rule suite as an
-    * `errors` array — the SHARED parent both partitions filter. Exposed so
-    * callers materializing both sides can persist it once.
+    * `errors` array — the SHARED parent both partitions filter.
+    * [[partitionFlagged]] materializes it once for both sides.
     */
   def flag(permits: DataFrame, universe: DataFrame): DataFrame = {
     val u = broadcast(
@@ -120,13 +120,16 @@ object PermitPipeline {
   }
 
   /** Step 8 tail: split a [[flag]]-ed frame into (upload, review)
-    * (chicago/permit_cleaning.py:427-452).
+    * (chicago/permit_cleaning.py:427-452). The reference cleans a pull once
+    * and writes both the upload set and the reviewer workbook from that one
+    * frame (:1138-1230); likewise both sides here share one materialization
+    * of the chain ([[ValidateOps.split]]), so writing both runs it once.
     */
-  def partitionFlagged(flagged: DataFrame): (DataFrame, DataFrame) = (
-    flagged.filter(size(col("errors")) === 0)
-      .drop("errors", "u_pin", "pin_in_universe"),
-    flagged.filter(size(col("errors")) > 0).drop("u_pin", "pin_in_universe")
-  )
+  def partitionFlagged(flagged: DataFrame): (DataFrame, DataFrame) = {
+    val (upload, review) = ValidateOps.split(
+      flagged.drop("u_pin", "pin_in_universe"), size(col("errors")) === 0)
+    (upload.drop("errors"), review)
+  }
 
   /** Step 8 (§3.1): §2.10 validate-and-partition. */
   def partition(permits: DataFrame, universe: DataFrame): (DataFrame, DataFrame) =
@@ -143,7 +146,9 @@ object PermitPipeline {
     flag(deduped, universe)
   }
 
-  /** Full §3.1 chain as one lazy plan. */
+  /** Full §3.1 chain: one lazy plan up to the flag, materialized once for
+    * both sides.
+    */
   def run(
       raw: DataFrame,
       universe: DataFrame,

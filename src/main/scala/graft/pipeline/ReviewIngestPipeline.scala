@@ -12,8 +12,8 @@ import graft.ops._
   *
   * The reviewer's cell-fill flag (S5) is modeled as a boolean `flagged`
   * column — formatting metadata as data (SURVEY §2.1 S5). All the heavy
-  * lifting reuses the §2 operator library; the chain is one lazy plan per
-  * output.
+  * lifting reuses the §2 operator library; the upload and review outputs
+  * share one materialization of the flagged chain.
   */
 object ReviewIngestPipeline {
 
@@ -28,8 +28,8 @@ object ReviewIngestPipeline {
     )
 
   /** §3.2 steps 4–5 up to the flagged frame: flag-filter → F4 normalize →
-    * legacy flag suite — the shared parent of the upload and review sides
-    * (exposed so callers materializing both can persist it once).
+    * legacy flag suite — the shared parent of the upload and review sides,
+    * which [[LegacyPipeline.splitFinal]] materializes once for both.
     */
   def runFlagged(sheet: DataFrame, universe: DataFrame): DataFrame = {
     // S5: the reviewer's fill-color predicate

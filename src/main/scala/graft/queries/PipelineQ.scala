@@ -149,11 +149,14 @@ object PipelineQ {
       dir: String,
       dedupe: Boolean = false
   ): (DataFrame, DataFrame) = {
-    val (up, rev) = PermitPipeline.partitionFlagged(flaggedFor(s, dir, dedupe))
     val outCols = Seq(
       "permit_no", "pin", "issue_date", "amount", "applicant",
       "applicant_street_address", "suggested_pins", "matched_keywords"
     )
+    // project before the split: its shared materialization stores only
+    // the columns either side emits, and the memo scan prunes the rest
+    val (up, rev) = PermitPipeline.partitionFlagged(
+      flaggedFor(s, dir, dedupe).select((outCols :+ "errors").map(col): _*))
     (
       up.select(outCols.map(col): _*),
       rev.select(outCols.map(col) :+ array_join(col("errors"), "; ").as("errors"): _*)
@@ -251,13 +254,12 @@ object PipelineQ {
     )
   }
 
-  private def runReview(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+  private def runReview(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val universe = t(s, dir, "customer")
       .select(lpad(col("c_custkey").cast("string"), 14, "0").as("pin"))
-    val (upload, review) = LegacyPipeline.splitFinal(memoDisk(s, s"ri|$dir") {
+    LegacyPipeline.splitFinal(memoDisk(s, s"ri|$dir") {
       ReviewIngestPipeline.runFlagged(par(s, reviewSheet(s, dir)), universe)
     })
-    (upload, review, ReviewIngestPipeline.qcCopy(reviewSheet(s, dir)))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -274,8 +276,10 @@ object PipelineQ {
         col("pin14_in_data"), col("valid_row")
       )
     },
+    // the QC copy reads only the sheet: it never builds the split
     "ri_qc" -> { (s, dir) =>
-      runReview(s, dir)._3.select(col("permit_no"), col("pin"), col("issue_date"))
+      ReviewIngestPipeline.qcCopy(reviewSheet(s, dir))
+        .select(col("permit_no"), col("pin"), col("issue_date"))
     },
     "ri_date_range" -> { (s, dir) =>
       ReviewIngestPipeline.dateRange(reviewSheet(s, dir), "issue_date")
@@ -308,13 +312,12 @@ object PipelineQ {
     // Universe-of-Valid-PINs sheet back by name
     "s6_workbook_roundtrip" -> { (s, dir) =>
       val path = Scratch.dir("xlsx_wb", dir) + "/review.xlsx"
-      val permits = run(s, dir)._2
       val pins = pinUniverse(s, dir)
         .select(PinOps.zfill14(col("pin")).as("pin"))
         .withColumn("pin_hyphenated", PinOps.hyphenate(col("pin")))
       Scratch.once(new java.io.File(path).getParent)(
         graft.sources.Xlsx.writeSheets(
-          Seq("Permits" -> permits, "Universe of Valid PINs" -> pins),
+          Seq("Permits" -> run(s, dir)._2, "Universe of Valid PINs" -> pins),
           path
         ))
       graft.sources.Xlsx.read(s, path, Some("Universe of Valid PINs"))

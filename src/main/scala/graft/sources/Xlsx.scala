@@ -701,15 +701,33 @@ object Xlsx {
 
   /** XML-escape; control characters below 0x20 (except tab/LF/CR) are
     * illegal in XML 1.0 even as numeric references, so they are dropped —
-    * the same lossy mapping every spreadsheet writer applies.
+    * the same lossy mapping every spreadsheet writer applies. CR goes out as
+    * a character reference: a literal one would be read back as LF (XML
+    * end-of-line normalization). Runs on every review cell, so a string
+    * with nothing to escape is returned as is, and any other takes one
+    * builder pass.
     */
-  private def escape(s: String): String =
-    s.flatMap {
-      case '&'  => "&amp;"
-      case '<'  => "&lt;"
-      case '>'  => "&gt;"
-      case '"'  => "&quot;"
-      case c if c < ' ' && c != '\t' && c != '\n' && c != '\r' => ""
-      case c    => c.toString
+  private def escape(s: String): String = {
+    def plain(c: Char) =
+      c >= ' ' && c != '&' && c != '<' && c != '>' && c != '"' || c == '\t' || c == '\n'
+    var i = 0
+    while (i < s.length && plain(s.charAt(i))) i += 1
+    if (i == s.length) s
+    else {
+      val sb = new java.lang.StringBuilder(s.length + 16).append(s, 0, i)
+      while (i < s.length) {
+        s.charAt(i) match {
+          case '&'  => sb.append("&amp;")
+          case '<'  => sb.append("&lt;")
+          case '>'  => sb.append("&gt;")
+          case '"'  => sb.append("&quot;")
+          case '\r' => sb.append("&#13;")
+          case c if plain(c) => sb.append(c)
+          case _    => ()
+        }
+        i += 1
+      }
+      sb.toString
     }
+  }
 }

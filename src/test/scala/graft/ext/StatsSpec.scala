@@ -455,6 +455,29 @@ class StatsSpec extends SparkSpecBase {
       s"constant group must collapse to a point CI: $out")
   }
 
+  test("bootstrapMeanCI: Long.MinValue takes the decimal fallback (abs cannot wrap the bound)") {
+    // half the group at Long.MinValue: 32 of them sum to 0 mod 2^64, so the
+    // long plan's mean would read 0.5. With non-ANSI arithmetic nothing
+    // throws, so only the overflow bound can route the group to decimal —
+    // and abs(Long.MinValue) in long wraps negative, understating it.
+    val df = (1 to 64).map(i => ("min", i.toLong, if (i % 2 == 0) Long.MinValue else 1L))
+      .toDF("g", "id", "v")
+    def ci(ansi: String) = {
+      var r: org.apache.spark.sql.Row = null
+      withSQLConf("spark.sql.ansi.enabled" -> ansi) {
+        r = Stats.bootstrapMeanCI(df, col("g"), col("id"), col("v"), reps = 32).collect().head
+      }
+      r
+    }
+    // under ANSI the long plan's first overflow throws, so the result is
+    // the all-decimal plan's
+    val ref = ci("true")
+    val got = ci("false")
+    val exact = ((BigDecimal(Long.MinValue) * 32 + 32) / 64).toDouble
+    assert(ref.getAs[Double]("mean") == exact, s"decimal reference: $ref")
+    assert(got == ref, s"long plan kept on a wrapped bound: $got vs decimal $ref")
+  }
+
   test("groupedQuantiles: one pass serves all quartiles; robustScale handles IQR 0") {
     val rows = (0 to 8).map(v => ("g", v.toLong, v.toLong)) ++
       (1 to 4).map(i => ("const", 100L + i, 7L))

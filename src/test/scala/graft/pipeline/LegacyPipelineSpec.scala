@@ -50,6 +50,24 @@ class LegacyPipelineSpec extends SparkSpecBase {
     assert(rev.head.getAs[Boolean]("valid_amount")) // 75 is fine — only pin failed
   }
 
+  test("splitFinal over one shared materialization returns the unshared split's rows") {
+    val flagged = LegacyPipeline.runFlagged(sheet, Seq("PIN2"), crosswalk, universe)
+    // the split before the sides shared a materialization
+    val flagCols = Seq("valid_filled", "valid_pin", "valid_permit", "valid_addr_len",
+      "valid_note_len", "valid_name_len", "pin14_in_data", "not_duplicate",
+      "valid_row", "valid_amount", "duplicate_pin_permit")
+    val expUp = graft.ops.ReshapeOps.numberedBuckets(
+      flagged.filter($"valid_row").drop(flagCols: _*),
+      Seq($"permit_no", $"pin"), 250, "bucket", "lline")
+    val expRev = flagged.filter(!$"valid_row")
+    val (upload, review) = LegacyPipeline.splitFinal(flagged)
+    assert(upload.limit(1).collect().length == 1) // partial first consumer
+    assert(rows(review) == rows(expRev) && rows(review).nonEmpty)
+    assert(rows(upload) == rows(expUp))
+    assert(upload.columns.toSeq == expUp.columns.toSeq)
+    assert(review.columns.toSeq == expRev.columns.toSeq)
+  }
+
   test("expandPins: originals keep their primary pin (null included), extras add rows") {
     val out = LegacyPipeline.expandPins(sheet, Seq("PIN2"))
     // P-1: original + extra = 2 rows; P-2/P-3: 1 each; P-4: null-pin row

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpecBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end §3.1 chain on reference-shaped micro-fixtures. */
@@ -66,21 +67,88 @@ class PermitPipelineSpec extends SparkSpecBase {
     assert(review.columns.contains("errors"))
   }
 
+  /** Warehouse rows carrying `cleaned`'s canonical 7 dedupe keys. */
+  private def warehouseRows(cleaned: DataFrame) =
+    cleaned.select(
+      $"pin".as("parid"),
+      graft.ops.TimeOps.renderPermdt(graft.ops.TimeOps.parseFlexible($"issue_date")).as("permdt"),
+      $"amount".cast("decimal(38,2)").as("amount"),
+      graft.ops.TextOps.addrDedupeKey($"applicant_street_address").as("note2"),
+      $"applicant".as("user21"),
+      $"permit_no".as("user28"),
+      graft.ops.TextOps.smartfileCanon($"work_description").as("user43")
+    )
+
   test("dedupeAgainstExisting drops rows already in the warehouse") {
     val cleaned = PermitPipeline.addSuggestedPins(PermitPipeline.cleanPermits(raw), universe)
     // fabricate an existing table matching P1/pin1's canonical keys exactly
-    val existing = cleaned
-      .filter($"permit_no" === "P1" && $"pin" === "12345678901234")
-      .select(
-        $"pin".as("parid"),
-        graft.ops.TimeOps.renderPermdt(graft.ops.TimeOps.parseFlexible($"issue_date")).as("permdt"),
-        $"amount".cast("decimal(38,2)").as("amount"),
-        graft.ops.TextOps.addrDedupeKey($"applicant_street_address").as("note2"),
-        $"applicant".as("user21"),
-        $"permit_no".as("user28"),
-        graft.ops.TextOps.smartfileCanon($"work_description").as("user43")
-      )
+    val existing = warehouseRows(cleaned.filter($"permit_no" === "P1" && $"pin" === "12345678901234"))
     val out = PermitPipeline.dedupeAgainstExisting(cleaned, existing)
     assert(out.count() == cleaned.count() - 1)
+  }
+
+  // 40 raw permits over 4 partitions of an RDD-backed frame (a local
+  // relation would be folded on the driver at optimization time); every
+  // third has a non-numeric cost and goes to review
+  private def manyRaw = {
+    val rows = (1 to 40).map { i =>
+      (s"P$i", "2024-03-05T00:00:00.000000", s"$i", "W", "MADISON ST", "New garage",
+        if (i % 3 == 0) "nope" else s"${i * 100}", "ACME",
+        if (i % 2 == 0) "12-34-567-890-1234" else "9876543210")
+    }
+    val df = rows.toDF("permit_", "issue_date", "street_number", "street_direction",
+      "street_name", "work_description", "reported_cost", "contact_1_name", "pin_list")
+    spark.createDataFrame(spark.sparkContext.parallelize(df.collect().toSeq, 4), df.schema)
+  }
+
+  /** `raw` with every row evaluation counted: a nondeterministic identity
+    * UDF cannot be duplicated or folded by the optimizer.
+    */
+  private def counted(raw: DataFrame) = {
+    val acc = spark.sparkContext.longAccumulator("raw_rows")
+    val seen = udf { (s: String) => acc.add(1); s }.asNondeterministic()
+    (raw.withColumn("permit_", seen($"permit_")), acc)
+  }
+
+  /** The split before the sides shared a materialization: two independent
+    * filters over the flagged plan.
+    */
+  private def unsharedSplit(flagged: DataFrame) = (
+    flagged.filter(size($"errors") === 0).drop("errors", "u_pin", "pin_in_universe"),
+    flagged.filter(size($"errors") > 0).drop("u_pin", "pin_in_universe")
+  )
+
+  private def existing = warehouseRows(PermitPipeline.cleanPermits(manyRaw).filter($"permit_no" === "P1"))
+
+  test("partitionFlagged runs the chain once for both sinks") {
+    val out = s"/tmp/graft_cache/permit_spec/upload-${System.nanoTime()}"
+    val (raw, acc) = counted(manyRaw)
+    val (upload, review) = PermitPipeline.run(raw, universe, Some(existing))
+    graft.sources.Sources.writeBatched(upload, out, 250)
+    val reviewed = review.collect()
+    assert(acc.value == 40L, s"each raw row must be evaluated once, not once per side: ${acc.value}")
+    assert(spark.read.parquet(out).count() + reviewed.length == 39) // P1 deduped away
+    // control: the unshared split re-runs the chain for its second side
+    val (raw2, acc2) = counted(manyRaw)
+    val (up2, rev2) = unsharedSplit(PermitPipeline.runFlagged(raw2, universe, Some(existing)))
+    up2.collect(); rev2.collect()
+    assert(acc2.value == 80L, s"the counter must see a re-run chain: ${acc2.value}")
+  }
+
+  test("partitionFlagged after a partial first consumer returns the unshared rows") {
+    val (expUp, expRev) = unsharedSplit(PermitPipeline.runFlagged(manyRaw, universe, Some(existing)))
+    val (wantUp, wantRev) = (rows(expUp), rows(expRev))
+    assert(wantUp.nonEmpty && wantRev.nonEmpty)
+    // upload first, partially
+    val (up1, rev1) = PermitPipeline.run(manyRaw, universe, Some(existing))
+    assert(up1.limit(1).collect().length == 1)
+    assert(rows(rev1) == wantRev)
+    assert(rows(up1) == wantUp)
+    // review first, partially
+    val (up2, rev2) = PermitPipeline.run(manyRaw, universe, Some(existing))
+    assert(rev2.limit(1).collect().length == 1)
+    assert(rows(up2) == wantUp)
+    assert(rows(rev2) == wantRev)
+    assert(up2.columns.toSeq == expUp.columns.toSeq && rev2.columns.toSeq == expRev.columns.toSeq)
   }
 }

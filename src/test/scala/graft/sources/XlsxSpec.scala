@@ -299,6 +299,21 @@ class XlsxSpec extends SparkSpecBase {
     assert(header == Seq("Hello World", "東京"))
   }
 
+  test("cell text escaping: & < > \" round-trip, tab/LF/CR kept, other control chars dropped") {
+    val cells = Seq(
+      "plain text" -> "plain text",
+      "a & b <c> \"d\"" -> "a & b <c> \"d\"",
+      "&amp; stays literal" -> "&amp; stays literal",
+      "tab\tlf\ncr\rcrlf\r\n" -> "tab\tlf\ncr\rcrlf\r\n",
+      "bell\u0007nul\u0000us\u001f<" -> "bellnulus<",
+      "\u0001" -> ""
+    )
+    val sheet = Seq("v") +: cells.map(c => Seq(c._1))
+    val (_, header, got) = Xlsx.parseWorkbook(Xlsx.buildWorkbook(Seq("S" -> sheet))).head
+    assert(header == Seq("v"))
+    assert(got.map(_.head) == cells.map(_._2))
+  }
+
   test("column reference math") {
     assert(Xlsx.colRef(0) == "A" && Xlsx.colRef(25) == "Z" && Xlsx.colRef(26) == "AA")
     assert(Xlsx.colIndex("A1") == 0 && Xlsx.colIndex("Z9") == 25 && Xlsx.colIndex("BC12") == 54)
